@@ -58,13 +58,6 @@ def main() -> None:
                          "rule per host into the crawl, so the headline's "
                          "exclusion of the politeness join is a MEASURED "
                          "cost, not an omission")
-    ap.add_argument("--split-write", action="store_true",
-                    help="split extract->write: harvest parquet encodes run "
-                         "as a pure-JVM background job over localCheckpoint "
-                         "blocks, overlapping the next round's Python "
-                         "extraction (SPARK-44705 alternation experiment); "
-                         "enables FAIR scheduling so the write shares cores "
-                         "instead of taking FIFO priority over extraction")
     args = ap.parse_args()
     bcast = {"auto": "auto", "true": True, "false": False}[args.broadcast]
 
@@ -81,7 +74,6 @@ def main() -> None:
         extra_conf={
             "spark.sql.warehouse.dir": "/tmp/spark-warehouse",
             "spark.driver.extraJavaOptions": "-Dderby.system.home=/tmp/derby",
-            **({"spark.scheduler.mode": "FAIR"} if args.split_write else {}),
         },
     )
 
@@ -145,7 +137,6 @@ def main() -> None:
         host_state=host_state,
         extract_documents=True,  # full round: links + byte-identical text
         discard_harvest=True,  # benchmark spill is dead weight once counted
-        split_harvest_write=args.split_write,
     )
     wall = time.monotonic() - t0
     host = host_telemetry(stat0, _proc_stat())
@@ -176,7 +167,6 @@ def main() -> None:
                 "bloom": args.bloom,
                 "broadcast": args.broadcast,
                 "politeness": args.politeness,
-                "split_write": args.split_write,
                 "shuffle_partitions": max(8, args.cpus),
                 "host": host,
             }

@@ -6,7 +6,8 @@ a manifest pointer, never in-place mutation):
 
     <ckpt>/round=<k>/frontier/   partitioned by shard = pmod(host_hash, N)
     <ckpt>/round=<k>/host_state/
-    <ckpt>/metrics/              one appended row per round (A7 analogue:
+    <ckpt>/metrics/              one zstd parquet file per round, one row
+                                 each, written by pyarrow (A7 analogue:
                                  crawler/crawling/crawler.go:233-238)
     <ckpt>/LATEST                text file with the last committed round
 
@@ -19,11 +20,16 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import sys
 import time
+import uuid
+from concurrent.futures import Future, ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.urls import canonicalize_url
 from ..schemas import FRONTIER_STATE_DUE, ROUND_METRICS_SCHEMA
 from .crawl import crawl_round, init_frontier
 
@@ -142,10 +148,24 @@ def load_host_state(spark: SparkSession, ckpt: str, k: int) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
-def append_metrics(spark: SparkSession, ckpt: str, row: dict) -> None:
-    spark.createDataFrame([row], ROUND_METRICS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(ckpt, "metrics"))
+def append_metrics(ckpt: str, row: dict) -> None:
+    """Write one round's metrics row as its own zstd parquet file in
+    ``<ckpt>/metrics/``, driver-side with pyarrow (no Spark job), with the
+    names, types and nullability of ROUND_METRICS_SCHEMA. The file is named
+    after its round, so a resume that redoes an uncommitted round replaces
+    that round's row instead of adding a second one. It is written under a
+    hidden temp name (Spark's reader skips dot-files) and renamed into
+    place, so a reader never sees a partial file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out = os.path.join(ckpt, "metrics")
+    os.makedirs(out, exist_ok=True)
+    table = pa.Table.from_pylist([row], schema=to_arrow_schema(ROUND_METRICS_SCHEMA))
+    tmp = os.path.join(out, f".{uuid.uuid4().hex}.tmp")
+    pq.write_table(table, tmp, compression="zstd")
+    os.replace(tmp, os.path.join(out, f"round-{row['round']:08d}.parquet"))
 
 
 def run_crawl(
@@ -168,7 +188,6 @@ def run_crawl(
     spill_harvest: bool = False,
     extract_documents: bool = False,
     discard_harvest: bool = False,
-    split_harvest_write: bool = False,
 ) -> dict:
     """Run scale-mode crawl rounds; returns summary metrics.
 
@@ -177,74 +196,48 @@ def run_crawl(
     ignored). Without ckpt_dir, lineage is truncated via localCheckpoint.
     ``discard_harvest=True`` (benchmarks) deletes the /tmp documents spill
     before returning; otherwise its path is returned as ``harvest_base``.
-
-    ``split_harvest_write=True`` (spill path only): the harvest parquet
-    write runs as a pure-JVM background job over localCheckpoint blocks,
-    overlapping the same round's merge and the NEXT round's Python
-    extraction (the SPARK-44705 alternation experiment). One write in
-    flight at a time on a dedicated 1-worker executor; in ckpt mode the
-    round commit joins the write first, so LATEST never advances past an
-    unflushed harvest.
     """
-    start_round = 0
     if resume:
         assert ckpt_dir, "resume requires ckpt_dir"
-        k = latest_round(ckpt_dir)
-        assert k is not None, "nothing to resume from"
-        frontier = load_frontier(spark, ckpt_dir, k)
+        start_round = latest_round(ckpt_dir)
+        assert start_round is not None, "nothing to resume from"
+        frontier = load_frontier(spark, ckpt_dir, start_round)
         if host_state is None:
-            host_state = load_host_state(spark, ckpt_dir, k)
-        start_round = k
+            host_state = load_host_state(spark, ckpt_dir, start_round)
     else:
         assert seeds, "fresh run requires seeds"
+        start_round = 0
         frontier = init_frontier(spark, seeds)
-        if ckpt_dir:
-            write_snapshot(frontier, os.path.join(_round_dir(ckpt_dir, 0), "frontier"))
-            if host_state is not None:
-                write_snapshot(
-                    host_state,
-                    os.path.join(_round_dir(ckpt_dir, 0), "host_state"),
-                    shard_col=None,
-                )
-            commit_round(ckpt_dir, 0)
+    last_round = start_round + rounds
 
-    # --- async round machinery (the 28%-idle fix) ------------------------
-    # Telemetry showed 32 cores only ~72% busy during crawl rounds: the
-    # idle was inter-job serial terms — a stats job re-scanning the
-    # frontier, the snapshot write + re-read round trip, and the bloom
-    # update blocking the round boundary. Three changes:
-    #   1. stats ride the localCheckpoint job as an Observation (zero
-    #      extra passes — works on both the ckpt and no-ckpt paths);
-    #   2. the ckpt snapshot write + metrics + LATEST commit run on a
-    #      single-worker background thread over the memory-backed
-    #      checkpointed frontier (no recompute), overlapping the next
-    #      round's dequeue/fetch/extract; commit order is preserved by
-    #      the one-worker queue and the run only returns after drain;
-    #   3. the bloom seen-set update is submitted in the background and
-    #      resolved lazily — the probe first needs it only AFTER the next
-    #      round's harvest write (the big job), which it overlaps.
-    import concurrent.futures as _cf
-
-    writer = _cf.ThreadPoolExecutor(max_workers=1, thread_name_prefix="snap")
-    pending_write: _cf.Future | None = None
-    # split-write shape: harvest parquet encodes run on their OWN 1-worker
-    # executor (not `writer`) so a multi-second harvest write never delays
-    # the seen-set update the next round's probe build resolves lazily
-    hwriter = (
-        _cf.ThreadPoolExecutor(max_workers=1, thread_name_prefix="harvest")
-        if split_harvest_write
-        else None
-    )
-    prev_harvest: tuple | None = None  # (future, blocks_df) of round k-1
+    # --- async round machinery -------------------------------------------
+    # Work that no later step of the round waits for runs on ONE background
+    # writer thread, so the main thread goes straight on to the next round's
+    # dequeue/fetch/extract. The writer's queue holds, in order:
+    #   1. the bloom seen-set build (bloom path), resolved lazily: the probe
+    #      first needs it after round 1's harvest write;
+    #   2. the round-0 frontier + host_state snapshots and the LATEST=0
+    #      commit (fresh leg with ckpt_dir);
+    #   3. per round: the bloom update, then the durability tail — frontier
+    #      + host_state snapshots over the memory-backed checkpointed frames
+    #      (no recompute), the pyarrow metrics file, the LATEST commit.
+    # Each round joins the previous persist before submitting its own, so at
+    # most one is in flight, its errors surface, and round k-1 commits
+    # before round k; LATEST advances only after that round's files and
+    # manifests are fully written. The run returns only after the drain.
+    # Round stats ride the lineage-truncating localCheckpoint as an
+    # Observation, so no round runs a separate stats job.
+    writer = ThreadPoolExecutor(max_workers=1, thread_name_prefix="snap")
+    pending_write: Future | None = None
 
     class _SeenHolder:
         """seen_df handle that transparently resolves an in-flight async
-        update (single producer: the round loop; single consumer: the
-        probe inside the next round's plan build)."""
+        build or update (single producer: the round loop; single consumer:
+        the probe inside the next round's plan build)."""
 
         def __init__(self):
             self.df = None
-            self.future: _cf.Future | None = None
+            self.future: Future | None = None
 
         def get(self):
             if self.future is not None:
@@ -258,48 +251,56 @@ def run_crawl(
         # the 10^10-URL dedup path (north_rule): per-shard bloom blobs keyed
         # by pmod(host_hash, n_shards). The probe pre-filters candidates to
         # definitely-new + maybe-seen, and only the maybe residue pays the
-        # exact anti-join against the frontier. Blobs are rebuilt from the
+        # exact anti-join against the frontier. Blobs are built from the
         # frontier on activation and updated incrementally with each
         # round's discoveries (tiny: n_shards rows of ~1 MB).
         nonlocal seen_probe
         from .seen_set import build_seen_set, seen_probe_factory
 
-        seen.df = build_seen_set(
-            spark, frontier.select("url_hash", "host_hash"), n_shards=seen_shards
-        ).localCheckpoint(eager=True)
+        keys = frontier.select("url_hash", "host_hash")
+        seen.future = writer.submit(
+            lambda: build_seen_set(spark, keys, n_shards=seen_shards).localCheckpoint(
+                eager=True
+            )
+        )
         seen_probe = seen_probe_factory(seen.get, n_shards=seen_shards)
 
-    # 'auto' = adaptive dedup escalation, same logic as join selection: the
-    # exact anti-join re-shuffles the FRONTIER's url_hash column every round
-    # (8 B/row — 80 GB/round at 10^10), while the bloom probe's cost rides
-    # the CANDIDATES plus fixed-size shard blobs. Below the threshold the
-    # long-key shuffle is cheaper than the Arrow probe's fixed tax; past it
-    # the blooms win and are built once from the live frontier, then updated
-    # incrementally.
-    auto_bloom = use_bloom_seen == "auto"
-    if use_bloom_seen is True and seen_probe is None:
-        _activate_bloom()
-
-    def stats(df, round_ts=None):
-        """size / due / visited-this-round in ONE job (not 3)."""
-        visited_flag = (
-            (F.col("last_crawled") == F.lit(round_ts).cast("timestamp")).cast("long")
-            if round_ts
-            else F.lit(0)
-        )
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("state") == FRONTIER_STATE_DUE).cast("long")).alias("due"),
-            F.sum(visited_flag).alias("vis"),
-        ).first()
-        return int(row["n"]), int(row["due"] or 0), int(row["vis"] or 0)
+    def _persist_round(k, fr, hs, row=None):
+        write_snapshot(fr, os.path.join(_round_dir(ckpt_dir, k), "frontier"))
+        if hs is not None:
+            write_snapshot(
+                hs, os.path.join(_round_dir(ckpt_dir, k), "host_state"), shard_col=None
+            )
+        if row is not None:
+            append_metrics(ckpt_dir, {f.name: row[f.name] for f in ROUND_METRICS_SCHEMA.fields})
+        commit_round(ckpt_dir, k)
 
     totals = {"visited": 0, "discovered": 0, "rounds": 0, "wall_sec": 0.0}
     per_round = []
     tmp_harvest_base = None  # /tmp spill base when no ckpt_dir owns it
-    prev_size, due, _ = stats(frontier)
     try:
-        for k in range(start_round + 1, start_round + rounds + 1):
+        # 'auto' = adaptive dedup escalation, same logic as join selection:
+        # the exact anti-join re-shuffles the FRONTIER's url_hash column every
+        # round (8 B/row — 80 GB/round at 10^10), while the bloom probe's cost
+        # rides the CANDIDATES plus fixed-size shard blobs. Below the
+        # threshold the long-key shuffle is cheaper than the Arrow probe's
+        # fixed tax; past it the blooms win and are built once from the live
+        # frontier, then updated incrementally.
+        auto_bloom = use_bloom_seen == "auto"
+        if use_bloom_seen is True and seen_probe is None:
+            _activate_bloom()
+        if resume:
+            got = frontier.agg(
+                F.count("*").alias("n"),
+                F.sum((F.col("state") == FRONTIER_STATE_DUE).cast("long")).alias("due"),
+            ).first()
+            prev_size, due = int(got["n"]), int(got["due"] or 0)
+        else:
+            # init_frontier holds exactly the distinct canonical seeds, all due
+            prev_size = due = len({c for s in seeds if (c := canonicalize_url(s))})
+            if ckpt_dir:
+                pending_write = writer.submit(_persist_round, 0, frontier, host_state)
+        for k in range(start_round + 1, last_round + 1):
             t0 = time.monotonic()
             if stop_when_exhausted and due == 0:
                 break
@@ -333,7 +334,6 @@ def run_crawl(
                 broadcast_batch=bcast,
                 harvest_dir=harvest_dir,
                 extract_documents=extract_documents,
-                async_writer=hwriter,
             )
             docs = res.metrics.get("documents")
             n_docs = 0
@@ -348,13 +348,8 @@ def run_crawl(
                 assert res.metrics.get("documents_inline"), "documents imply spill"
                 n_docs = docs.count()
                 keep_harvest = True
-            # stats ride the lineage-truncating localCheckpoint as an
-            # Observation: ONE job materializes the merged frontier in memory
-            # AND counts size/due/visited — the old separate stats job (a full
-            # frontier re-scan per round) and the ckpt-path's write+re-read
-            # round trip are both gone
-            from pyspark.sql import Observation
-
+            # ONE job materializes the merged frontier in memory AND counts
+            # size/due/visited through the Observation
             obs = Observation(f"frontier_stats_r{k}")
             observed = res.frontier.observe(
                 obs,
@@ -367,25 +362,19 @@ def run_crawl(
             t_ck = time.monotonic()
             frontier = observed.localCheckpoint(eager=True)
             merge_sec = time.monotonic() - t_ck
-            if prev_harvest is not None:
-                # round k-1's background write has had its own round tail
-                # plus all of round k to finish; join it (errors surface
-                # here), stamp its duration into that round's telemetry,
-                # and drop the block reference so ContextCleaner can reap
-                # the checkpointed text blocks
-                prev_harvest[2]["harvest_write_sec"] = round(
-                    float(prev_harvest[0].result()), 3
-                )
-                prev_harvest = None
             got = obs.get
             size, due, visited = int(got["n"]), int(got["due"] or 0), int(got["vis"] or 0)
-            if seen.df is not None or seen.future is not None:
+            # the update is for the NEXT round's probe: after this call's last
+            # round (or an exhausted frontier) nothing reads it, and a resume
+            # rebuilds the blooms from the frontier snapshot
+            probed_again = k < last_round and not (stop_when_exhausted and due == 0)
+            if probed_again and (seen.df is not None or seen.future is not None):
                 from .seen_set import update_seen_set
 
                 new_keys = frontier.filter(
                     F.col("discovered_ts") == F.lit(round_ts).cast("timestamp")
                 ).select("url_hash", "host_hash")
-                # resolve the previous round's update (main thread only — the
+                # resolve the previous build/update (main thread only — the
                 # background thread never touches the holder), then overlap
                 # this round's blob update with the next round's big jobs
                 prev_seen = seen.get()
@@ -401,17 +390,6 @@ def run_crawl(
                 # the frontier snapshot is written it is dead weight (a heavy
                 # crawl leaves ~GBs per round otherwise). When it doubles as
                 # the documents store (documents_inline) it is OUTPUT and stays.
-                # Split mode: the background write to this very dir may still
-                # be in flight (it is normally joined only at the next
-                # round's merge) — join it first or the rmtree yanks the
-                # _temporary dir out from under it mid-write.
-                import shutil
-
-                if res.metrics.get("harvest_write_future") is not None:
-                    res.metrics["harvest_write_sec"] = round(
-                        float(res.metrics["harvest_write_future"].result()), 3
-                    )
-                    res.metrics["harvest_write_future"] = None
                 shutil.rmtree(harvest_dir, ignore_errors=True)
             if host_state is not None:
                 from .frontier import update_host_clock
@@ -435,61 +413,13 @@ def run_crawl(
                 # phase telemetry (not in ROUND_METRICS_SCHEMA — stripped
                 # before append_metrics): where the round wall actually went
                 "write_sec": round(float(res.metrics.get("write_sec") or 0.0), 3),
-                # split mode, links-only spill: the background write was
-                # already joined at the rmtree — carry its duration here;
-                # the keep-harvest path stamps it when the future resolves
-                # at the next round's merge (or the final drain)
-                **(
-                    {"harvest_write_sec": res.metrics["harvest_write_sec"]}
-                    if res.metrics.get("harvest_write_sec") is not None
-                    else {}
-                ),
                 "merge_sec": round(merge_sec, 3),
             }
             per_round.append(row)
-            if res.metrics.get("harvest_write_future") is not None:
-                prev_harvest = (
-                    res.metrics["harvest_write_future"],
-                    res.metrics["harvest_blocks"],
-                    row,
-                )
             if ckpt_dir:
-                # the whole durability tail (frontier + host_state snapshots,
-                # metrics append, LATEST commit) runs on the one-worker writer
-                # thread over MEMORY-BACKED checkpointed frames (no recompute),
-                # overlapping the next round's dequeue/fetch/extract. At most
-                # one round is in flight (we join the previous future first, so
-                # errors surface and commits stay ordered); crash semantics are
-                # unchanged — LATEST advances only after that round's files and
-                # manifests are fully written.
-                def _persist_round(
-                    fr=frontier,
-                    hs=host_state,
-                    row=row,
-                    k=k,
-                    hfut=res.metrics.get("harvest_write_future"),
-                ):
-                    if hfut is not None:
-                        # durability order: LATEST must not advance past an
-                        # unflushed harvest (split-write mode)
-                        hfut.result()
-                    write_snapshot(fr, os.path.join(_round_dir(ckpt_dir, k), "frontier"))
-                    if hs is not None:
-                        write_snapshot(
-                            hs,
-                            os.path.join(_round_dir(ckpt_dir, k), "host_state"),
-                            shard_col=None,
-                        )
-                    append_metrics(
-                        spark,
-                        ckpt_dir,
-                        {f.name: row[f.name] for f in ROUND_METRICS_SCHEMA.fields},
-                    )
-                    commit_round(ckpt_dir, k)
-
                 if pending_write is not None:
                     pending_write.result()
-                pending_write = writer.submit(_persist_round)
+                pending_write = writer.submit(_persist_round, k, frontier, host_state, row)
             totals["visited"] += row["visited"]
             totals["discovered"] += row["discovered"]
             totals["rounds"] += 1
@@ -503,37 +433,23 @@ def run_crawl(
         # swallowed here — it was either already raised at the in-loop
         # join or is secondary to the in-flight exception) and shutdown
         # ALWAYS runs so the snap thread never leaks
-        import sys as _sys
-
         t_drain = time.monotonic()
-        exc_in_flight = _sys.exc_info()[0] is not None
+        exc_in_flight = sys.exc_info()[0] is not None
         try:
+            # the pending persist and any in-flight seen-set build/update
+            # must surface: shutdown below waits for them but discards
+            # their exceptions
+            waits = [seen.get]
             if pending_write is not None:
+                waits.insert(0, pending_write.result)
+            for wait in waits:
                 try:
-                    pending_write.result()
-                except Exception:
-                    if not exc_in_flight:
-                        raise
-            # the in-flight seen-set update must surface too: shutdown
-            # below waits for it but discards its exception, so a failed
-            # final-round bloom update would otherwise report success
-            try:
-                seen.get()
-            except Exception:
-                if not exc_in_flight:
-                    raise
-            if prev_harvest is not None:
-                try:
-                    prev_harvest[2]["harvest_write_sec"] = round(
-                        float(prev_harvest[0].result()), 3
-                    )
+                    wait()
                 except Exception:
                     if not exc_in_flight:
                         raise
         finally:
             writer.shutdown(wait=True)
-            if hwriter is not None:
-                hwriter.shutdown(wait=True)
         drain = time.monotonic() - t_drain
     if per_round and drain > 0:
         last = per_round[-1]
@@ -555,8 +471,6 @@ def run_crawl(
     # backed) by this point, so nothing still reads the spill; other
     # callers get the path in harvest_base and own the cleanup.
     if discard_harvest and tmp_harvest_base:
-        import shutil
-
         shutil.rmtree(tmp_harvest_base, ignore_errors=True)
         tmp_harvest_base = None
     totals["harvest_base"] = tmp_harvest_base

@@ -230,7 +230,6 @@ def crawl_round(
     harvest_dir: str | None = None,
     extract_documents: bool = False,
     wave_override: DataFrame | None = None,
-    async_writer=None,
 ) -> RoundResult:
     """One scale-mode wave. Pure DataFrame plan; caller materializes.
 
@@ -246,18 +245,6 @@ def crawl_round(
     extract_documents: also produce the per-round ``documents`` rows (text
     extraction + JVM text stats — SURVEY.md §7 step 6); returned as
     ``res.documents`` for the caller to write.
-
-    async_writer: optional 1-worker Executor enabling the split
-    extract->write shape on the spill path: the extraction output is
-    materialized via localCheckpoint (the Python pass), the parquet
-    encode+write is submitted to the executor, and downstream consumers
-    read the blocks — so the pure-JVM write of wave k overlaps the
-    Python extraction of wave k+1 instead of alternating with it inside
-    one stage (SPARK-44705 strict JVM/Python alternation measured at
-    22/32 threads parked). The future and block handle are returned in
-    metrics["harvest_write_future"/"harvest_blocks"]; the CALLER joins
-    the future before committing the round and drops the block reference
-    afterwards.
     """
     if extract_documents and harvest_dir is None:
         raise ValueError(
@@ -281,8 +268,6 @@ def crawl_round(
         )
     )
     persisted = []
-    harvest_write_future = None
-    harvest_blocks = None
     if harvest_dir is not None:
         # spill path extracts links ALREADY CANONICALIZED (one Python pass;
         # the merge job then needs no second ArrowEvalPython stage over the
@@ -322,35 +307,9 @@ def crawl_round(
                 extract_canonical_links_udf(F.col("html")).alias("_links"),
             )
         t_w = time.monotonic()
-        if async_writer is not None:
-            # split shape: foreground job = fetch join + Arrow extraction +
-            # block store (no parquet encode); the write becomes a pure-JVM
-            # background job over the blocks
-            harvest = harvested.localCheckpoint(eager=True)
-            harvest_blocks = harvest
-
-            def _bg_write(df=harvest, p=harvest_dir):
-                # own FAIR pool: under spark.scheduler.mode=FAIR the write
-                # SHARES cores with the foreground pool instead of taking
-                # FIFO priority over the next extraction (thread-local
-                # property; pinned-thread mode maps it to the JVM thread).
-                # Harmless no-op under FIFO. Returns the write's wall time
-                # so the caller can stamp harvest_write_sec into the round
-                # telemetry (write_sec means extraction-leg-only in split
-                # mode — the A/B needs both numbers).
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "harvest_write"
-                )
-                t = time.monotonic()
-                df.write.mode("overwrite").parquet(p)
-                return time.monotonic() - t
-
-            harvest_write_future = async_writer.submit(_bg_write)
-            write_sec = time.monotonic() - t_w  # extraction leg only
-        else:
-            harvested.write.mode("overwrite").parquet(harvest_dir)
-            write_sec = time.monotonic() - t_w
-            harvest = spark.read.parquet(harvest_dir)
+        harvested.write.mode("overwrite").parquet(harvest_dir)
+        write_sec = time.monotonic() - t_w
+        harvest = spark.read.parquet(harvest_dir)
         candidates = candidates_from_harvest(harvest, canonical=True)
     else:
         harvest, candidates = discover_links(
@@ -442,8 +401,6 @@ def crawl_round(
             "documents": documents,
             "documents_inline": documents_inline,
             "write_sec": write_sec,
-            "harvest_write_future": harvest_write_future,
-            "harvest_blocks": harvest_blocks,
         },
     )
 

@@ -41,7 +41,9 @@ num=85); the default 1e12 leaves per-node precision of 100 units at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 DEFAULT_SCALE = 10**12
 
@@ -195,8 +197,10 @@ def bfs_depths(
     src-shuffled) edge list against the current frontier plus one
     anti-join against the visited set — the same per-round shape as the
     production crawl loop (operators/crawl.py), minus fetch.
-    ``localCheckpoint`` per level keeps the plan O(1) in depth; the loop
-    exits early once a level discovers nothing.
+    Each level is ``localCheckpoint``ed, so nothing is recomputed; the
+    visited anti-join's plan is a union of one in-memory checkpoint scan
+    per level, i.e. O(max_depth) branches. The loop exits early once a
+    level discovers nothing.
     """
     e = (
         edges.select(
@@ -207,10 +211,6 @@ def bfs_depths(
         .distinct()
         .persist()
     )
-    from functools import reduce
-
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
     # ONE job per level: the new-level checkpoint carries an Observation
     # that counts it (the run_crawl trick), so the early-exit probe and
@@ -1934,8 +1934,6 @@ def _reach(e: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:
     materialization) and the emptiness probe rides it as an Observation
     (the run_crawl trick), so the old separate probe job is gone. This
     matters when a caller (bow-tie) runs four deep sweeps back to back."""
-    from pyspark.sql import Observation
-
     visited = (
         seeds.select("node")
         .distinct()
